@@ -91,21 +91,3 @@ def binary_metrics_from_cells(
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
     rmse = math.sqrt((fp + fn) / n) if n else 0.0  # binary 0/1: MSE = error rate
     return BinaryMetrics(n=n, tp=tp, fp=fp, tn=tn, fn=fn, accuracy=acc, precision=prec, recall=rec, f1=f1, rmse=rmse)
-
-
-def clustering_agreement(pred_df: DataFrame, label_col: str = "target", pred_col: str = "prediction") -> float:
-    """Permutation-invariant clustering accuracy for k=2.
-
-    The reference's KMeans eval assumes cluster-id ≡ label
-    (KMEANS CLUSTERING/kmeans.py:101-114) — an arbitrary
-    correspondence. Here: score both mappings, report the max
-    (SURVEY.md §3 B calls for exactly this fix).
-    """
-    agg = pred_df.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col(label_col) == F.col(pred_col), 1)).alias("same"),
-    ).collect()[0]
-    if not agg["n"]:
-        return 0.0
-    direct = agg["same"] / agg["n"]
-    return max(direct, 1.0 - direct)

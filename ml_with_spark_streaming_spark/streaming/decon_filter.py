@@ -17,7 +17,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.decontaminate import (
@@ -27,11 +26,11 @@ from ml_with_spark_streaming_spark.operators.decontaminate import (
     multi_contamination_counts,
     tagged_eval_ngrams,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 @dataclass
-class StreamingDecontaminationFilter:
+class StreamingDecontaminationFilter(ForeachBatchStage):
     """Reject documents overlapping the eval set, per micro-batch.
 
     ``on_kept`` receives each batch's clean slice; ``history`` records
@@ -154,14 +153,3 @@ class StreamingDecontaminationFilter:
                 self.on_kept(kept, batch_id)
         finally:
             flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

@@ -26,10 +26,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.operators.dsir import dsir_score_against
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 def freeze_weights(weights_df: DataFrame) -> list[tuple[int, int]]:
@@ -56,7 +55,7 @@ def weights_from_state(state: dict) -> list[tuple[int, int]]:
 
 
 @dataclass
-class StreamingDSIRFilter:
+class StreamingDSIRFilter(ForeachBatchStage):
     """Apply a frozen DSIR weight table to a document stream; keep
     docs whose total log importance weight is positive (more
     target-like than raw-corpus-like — q135's rule).
@@ -117,14 +116,3 @@ class StreamingDSIRFilter:
                 self.on_kept(flagged.filter("_keep").drop("_keep", "selected"), batch_id)
         finally:
             flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

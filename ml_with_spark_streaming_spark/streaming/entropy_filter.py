@@ -20,14 +20,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.operators.textstats import char_bigram_entropy
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 @dataclass
-class StreamingEntropyFilter:
+class StreamingEntropyFilter(ForeachBatchStage):
     """Keep documents whose char-bigram entropy (micro-nats) is at
     least ``threshold_x1e6``. ``on_kept`` receives each batch's kept
     slice; ``history`` records per-batch totals for drift monitoring.
@@ -75,14 +74,3 @@ class StreamingEntropyFilter:
                 )
         finally:
             flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

@@ -30,3 +30,21 @@ def attach_foreach_batch(
     else:
         w = w.trigger(processingTime=f"{trigger_seconds} seconds")
     return w.start()
+
+
+class ForeachBatchStage:
+    """Base for a stage whose whole stream contract is
+    ``process_batch(batch_df, batch_id)``: ``attach`` starts ``docs``
+    through it. ``self.process_batch`` is resolved when ``attach`` is
+    called, so an instance attribute that wraps it wins."""
+
+    def attach(
+        self,
+        docs: DataFrame,
+        checkpoint: str | None = None,
+        trigger_seconds: int = 5,
+        available_now: bool = False,
+    ) -> StreamingQuery:
+        return attach_foreach_batch(
+            docs, self.process_batch, checkpoint, trigger_seconds, available_now
+        )

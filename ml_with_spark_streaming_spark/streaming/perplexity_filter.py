@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.lm import (
@@ -33,7 +32,7 @@ from ml_with_spark_streaming_spark.operators.lm import (
     score_against_lm,
 )
 from ml_with_spark_streaming_spark.functions.text import clean_text_expr, tokens_expr
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 def train_lm(
@@ -51,7 +50,7 @@ def train_lm(
 
 
 @dataclass
-class StreamingPerplexityFilter:
+class StreamingPerplexityFilter(ForeachBatchStage):
     """Apply a frozen bigram LM to a document stream; keep docs whose
     per-bigram mean NLL is at or below the threshold (micro-nats).
 
@@ -140,14 +139,3 @@ class StreamingPerplexityFilter:
                 )
         finally:
             flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

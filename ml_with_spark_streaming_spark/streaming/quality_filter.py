@@ -24,9 +24,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 from ml_with_spark_streaming_spark.operators.quality_clf import (
     classifier_scores,
@@ -58,7 +57,7 @@ def weights_from_state(state: dict) -> list[tuple[str, int]]:
 
 
 @dataclass
-class StreamingQualityFilter:
+class StreamingQualityFilter(ForeachBatchStage):
     """Apply a frozen quality-classifier weight table to a document
     stream; keep docs with positive score.
 
@@ -110,14 +109,3 @@ class StreamingQualityFilter:
                 self.on_kept(flagged.filter("_keep").drop("_keep", "score"), batch_id)
         finally:
             flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

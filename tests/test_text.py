@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ml_with_spark_streaming_spark.functions.porter import porter_stem
 from ml_with_spark_streaming_spark.functions.snowball import snowball_stem
 from ml_with_spark_streaming_spark.functions.text import (
     clean_text_expr,
@@ -112,14 +111,6 @@ def test_stopword_removal(spark):
     assert out == ["cat", "dog"]
 
 
-def test_porter_stem_basics():
-    assert porter_stem("caresses") == "caress"
-    assert porter_stem("ponies") == "poni"
-    assert porter_stem("running") == "run"
-    assert porter_stem("agreed") == "agre"
-    assert porter_stem("cats") == "cat"
-
-
 # NLTK SnowballStemmer("english") goldens, hand-derived from the
 # published Porter2 spec (snowballstem.org/algorithms/english) — the
 # reference pipeline's stemmer (PAC/passiveAgressiveModel.py:64-66).
@@ -156,25 +147,6 @@ SNOWBALL_GOLDENS = {
 def test_snowball_stem_goldens():
     got = {w: snowball_stem(w) for w in SNOWBALL_GOLDENS}
     assert got == SNOWBALL_GOLDENS
-
-
-def test_snowball_diverges_from_porter_where_specified():
-    """The round-1 engine shipped original Porter; the reference uses
-    Snowball. Pin the words where the two algorithms MUST differ so a
-    regression back to Porter semantics is loud."""
-    for word, expected in {
-        "dying": "die",      # Porter: dy
-        "news": "news",      # Porter: new
-        "ties": "tie",       # Porter: ti
-        "gas": "gas",        # Porter: ga
-        "boy": "boy",        # Porter: boi
-        "quickly": "quick",  # Porter: quickli
-        "geology": "geolog", # Porter: geologi
-        "proceed": "proceed",  # Porter: procee
-        "communication": "communic",  # Porter: commun
-    }.items():
-        assert snowball_stem(word) == expected
-        assert porter_stem(word) != expected
 
 
 def test_stem_udf_matches_python(spark):
